@@ -22,14 +22,16 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparvi_spark.functions import values_df
 from sparvi_spark.operators.anomalies import detect_anomalies
 from sparvi_spark.operators.profile import profile_table
 from sparvi_spark.operators.schema_diff import (
+    CHANGE_SCHEMA,
     detect_changes,
     snapshot_from_dataframe,
 )
 from sparvi_spark.operators.trends import profile_trends, retain_latest
-from sparvi_spark.operators.validation import Rule, run_rules
+from sparvi_spark.operators.validation import RESULT_SCHEMA, Rule, run_rules
 from sparvi_spark.sources.state import StateStore
 
 
@@ -154,6 +156,7 @@ class Engine:
                         primary_keys: tuple[str, ...] = ()) -> DataFrame:
         """Validation run: batched rule execution -> store results; failures
         publish a validation_failure event (routes/validations.py:820-848).
+        Returns the result rows as a local frame.
         ``rules=None`` generates the default suite (V1-V20) from the
         DataFrame's schema + name heuristics, like the reference does from
         warehouse introspection."""
@@ -183,14 +186,18 @@ class Engine:
             if prev_rows and prev_rows[0][0] is not None:
                 rules = rules + [row_growth_rule_vs(
                     table_name, int(prev_rows[0][0]))]
-        results = run_rules(df, rules, ref_tables=ref_tables)
-        stored = results.select(
-            F.lit(table_name).alias("table_name"), "rule_name", "operator",
-            "expected_lo", "expected_hi", "actual_value", "is_valid",
-            F.lit(run_at).cast("timestamp").alias("run_at"))
-        self.state.append("validation_results", stored)
-        failed = [r["rule_name"] for r in
-                  results.where(~F.col("is_valid")).select("rule_name").collect()]
+        # one action: the append, the failure event and the returned frame
+        # all read these rows, so the rule plan never runs a second time
+        rows = run_rules(df, rules, ref_tables=ref_tables).collect()
+        results = values_df(self.spark, [tuple(r) for r in rows],
+                            RESULT_SCHEMA)
+        # coalesce(1): a VALUES scan splits into up to one slice per core,
+        # and each slice would land as its own tiny state file
+        self.state.append("validation_results", results.coalesce(1).select(
+            F.lit(table_name).alias("table_name"), "*",
+            F.lit(run_at).cast("timestamp").alias("run_at")))
+        # `is False`, not falsy: a NULL verdict is unknown, not failed
+        failed = [r["rule_name"] for r in rows if r["is_valid"] is False]
         if failed:
             self.publish_event("validation_failure", table_name,
                                ",".join(sorted(failed)), run_at)
@@ -202,29 +209,33 @@ class Engine:
                      as_of: str | None = None) -> DataFrame | None:
         """Schema tracking: snapshot current schema, diff against the stored
         baseline (S1-S8), store snapshot + changes. Returns the change rows
-        (None on baseline bootstrap)."""
+        as a local frame (None on baseline bootstrap)."""
         as_of = as_of or _utcnow()
         current = snapshot_from_dataframe(self.spark, df, table_name, primary_keys)
         prev_all = self.state.read("schema_snapshots").where(
             F.col("table_name") == table_name)
+        # one action: no stored snapshot for the table reads as NULL
+        latest_ts = prev_all.agg(F.max("collected_at")).collect()[0][0]
         previous = None
-        if prev_all.limit(1).count() > 0:
-            latest_ts = prev_all.agg(F.max("collected_at")).collect()[0][0]
+        if latest_ts is not None:
             previous = prev_all.where(F.col("collected_at") == latest_ts) \
                 .select("table_name", "column_name", "col_type", "nullable",
                         "pk_ordinal")
         self.state.append("schema_snapshots", current.withColumn(
             "collected_at", F.lit(as_of).cast("timestamp")))
         changes = detect_changes(previous, current)
-        if changes is not None:
-            stored = changes.withColumn(
-                "detected_at", F.lit(as_of).cast("timestamp"))
-            self.state.append("schema_changes", stored)
-            important = [r["change_type"] for r in
-                         changes.where(F.col("important")).collect()]
-            if important:
-                self.publish_event("schema_change", table_name,
-                                   ",".join(sorted(set(important))), as_of)
+        if changes is None:
+            return None
+        # one action: the append, the event and the returned frame share it
+        rows = changes.collect()
+        changes = values_df(self.spark, [tuple(r) for r in rows],
+                            CHANGE_SCHEMA)
+        self.state.append("schema_changes", changes.coalesce(1).withColumn(
+            "detected_at", F.lit(as_of).cast("timestamp")))
+        important = {r["change_type"] for r in rows if r["important"]}
+        if important:
+            self.publish_event("schema_change", table_name,
+                               ",".join(sorted(important)), as_of)
         return changes
 
     def save_drift_baseline(self, df: DataFrame, table_name: str,

@@ -10,6 +10,8 @@ CASE WHEN, CURRENT_DATE/TIMESTAMP, date_trunc) is available verbatim via
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -66,6 +68,8 @@ def values_df(spark, rows, schema):
             if v in (float("inf"), float("-inf")):  # must carry the cast
                 return (f"cast('{'-' if v < 0 else ''}Infinity' "
                         f"as {typ})")
+            if v == 0.0 and math.copysign(1.0, v) < 0:  # a -0.0 literal
+                return f"cast('-0.0' as {typ})"  # parses as decimal: no sign
             return repr(v)  # shortest roundtrip; exact through parse
         if typ in ("bigint", "int", "smallint", "tinyint", "long"):
             return str(int(v))

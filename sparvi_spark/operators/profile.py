@@ -3,13 +3,15 @@
 The reference batches all per-column aggregates of a type class into one
 SELECT per class (reference: backend/app.py:3291-3857). We go further and
 fuse ALL type classes into ONE ``df.agg`` pass — a single scan, no shuffle
-(partial aggregation map-side, final merge on one reducer row). Top-K (P8)
-and exact duplicate count (P9) each need a shuffle and run as separate jobs.
+(partial aggregation map-side, final merge on one reducer row). Exact
+distinct counts (P3), top-K (P8) and the exact duplicate count (P9) each
+need a shuffle and run as separate jobs: ``profile_table(exact=True)`` is
+4 jobs — fused pass, melted distinct counts, top-K, full-row dedup.
 
 Scale notes (100 TB):
-- ``exact=False`` switches COUNT(DISTINCT) -> approx_count_distinct and
-  exact percentiles -> percentile_approx, turning the multi-expand exact
-  distinct plan into a single-pass sketch plan.
+- ``exact=False`` switches COUNT(DISTINCT) -> approx_count_distinct inside
+  the fused pass and exact percentiles -> percentile_approx: distinct
+  counts cost no job of their own, and the dup count projects to a hash.
 - No driver-side collect until the final one-row aggregate / top-K rows
   (bounded by k * n_columns).
 - All heavy expressions are built-in Column functions => whole-stage codegen.
@@ -740,7 +742,9 @@ def profile_table(
     top_k_distinct_cap: int = 1000,
     as_of: str | _dt.datetime | None = None,
 ) -> dict:
-    """Compute the full profile document in 3 jobs (1 scan + top-K + dupes).
+    """Compute the full profile document: the fused scan, then top-K and
+    the dup count, plus (exact lane only) the melted distinct counts —
+    4 jobs exact, 3 approx.
 
     Mirrors the output contract of the reference's ``profile_table``
     (consumption sites: backend/routes/profiles.py:75-78,
@@ -763,7 +767,8 @@ def profile_table(
     exprs: list[Column] = [F.count(F.lit(1)).alias("__row_count")]
     for c in simple_cols:
         exprs.append(null_count(c))
-        exprs.append(distinct_count(c, exact=exact))
+        if not exact:
+            exprs.append(distinct_count(c, exact=False))
     for c in buckets["numeric"]:
         exprs.extend(numeric_exprs(c, exact=exact))
     for c in buckets["datetime"]:
@@ -773,6 +778,13 @@ def profile_table(
 
     row = df.agg(*exprs).collect()[0].asDict()
     n = row["__row_count"]
+    if exact and simple_cols:
+        # countDistinct in the fused pass would plan an Expand that copies
+        # every row once per column at full width; the melt keeps rows a
+        # few scalars wide. An empty frame melts to no rows, hence the 0.
+        melted = {r["column_name"]: r["distinct_cnt"]
+                  for r in distinct_counts_melted(df, simple_cols).collect()}
+        row.update({f"{c}__distinct": melted.get(c, 0) for c in simple_cols})
 
     completeness, null_fractions, distinct_counts, summary = {}, {}, {}, {}
     for c in simple_cols:
@@ -841,9 +853,9 @@ def profile_table(
                 {"value": r["value"][:100], "count": r["cnt"], "percentage": r["pct"]}
             )
 
-    # exact mode keeps the full-row dedup (oracle-parity); approx mode uses
-    # the 8-byte hash projection — cheap enough to always compute
-    dup = duplicate_count(df, exact=exact)
+    # exact mode keeps the full-row dedup (oracle-parity) and reuses the
+    # fused pass's row count; approx mode uses the 8-byte hash projection
+    dup = n - df.dropDuplicates().count() if exact else duplicate_count(df)
 
     profile = {
         "table": table_name,

@@ -26,6 +26,11 @@ SNAPSHOT_SCHEMA = (
     "table_name string, column_name string, col_type string, nullable boolean, "
     "pk_ordinal int"
 )
+# the row shape compare_schemas returns
+CHANGE_SCHEMA = (
+    "change_type string, table_name string, column_name string, "
+    "details string, important boolean"
+)
 
 
 def snapshot_from_specs(spark: SparkSession, specs: list[TableSpec]) -> DataFrame:

@@ -29,6 +29,10 @@ from sparvi_spark.testdata import TableSpec
 
 DEFAULT_AS_OF = "2026-01-01 00:00:00"
 
+# the row shape run_rules returns
+RESULT_SCHEMA = ("rule_name string, operator string, expected_lo double, "
+                 "expected_hi double, actual_value double, is_valid boolean")
+
 # Name-pattern lists (default_validations.py — cited per family above).
 UNIQUE_NAME_PATTERNS = ["id", "code", "number", "uuid", "guid", "key", "hash", "identifier"]
 NEGATIVE_ALLOWED_PATTERNS = ["balance", "difference", "delta", "change", "temperature",
@@ -532,9 +536,7 @@ def run_rules(
         # empty rule list (or only unrecognized kinds): an empty result
         # frame, not an IndexError — callers treat "no rows" as "no rules"
         sess = spark or df.sparkSession
-        return sess.createDataFrame(
-            [], "rule_name string, operator string, expected_lo double, "
-                "expected_hi double, actual_value double, is_valid boolean")
+        return sess.createDataFrame([], RESULT_SCHEMA)
     result = pieces[0]
     for p in pieces[1:]:
         result = result.unionAll(p)

@@ -67,6 +67,78 @@ def test_schema_tracking_bootstrap_then_diff(spark, engine):
     assert stored.where(F.col("important")).count() >= 2  # removed + type change
 
 
+def _count_jobs(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_engine_returns_the_rows_it_stores(spark, engine):
+    """Over two days, run_validations and track_schema hand back exactly
+    the rows they stored, already computed: collecting the returned
+    frames launches no Spark job (no rule or diff plan re-runs)."""
+    df = _docs(spark)
+    days = [(df, "2026-01-01 00:00:00"),
+            (df.drop("lang").withColumn("extra", F.lit(1)),
+             "2026-01-02 00:00:00")]
+
+    def stored(entity, col, at, *drop):
+        return sorted((tuple(r) for r in engine.state.read(entity)
+                       .where(F.col(col) == F.lit(at).cast("timestamp"))
+                       .drop(col, "run_date", *drop).collect()), key=repr)
+
+    for i, (d, at) in enumerate(days):
+        res = engine.run_validations(d, "documents", run_at=at)
+        rows, jobs = _count_jobs(spark, f"val{i}", res.collect)
+        assert jobs == 0
+        assert rows and sorted(map(tuple, rows), key=repr) == stored(
+            "validation_results", "run_at", at, "table_name")
+
+        changes = engine.track_schema(d, "documents",
+                                      primary_keys=("doc_id",), as_of=at)
+        if i == 0:
+            assert changes is None  # baseline bootstrap
+            continue
+        rows, jobs = _count_jobs(spark, f"chg{i}", changes.collect)
+        assert jobs == 0
+        assert {(r["change_type"], r["column_name"]) for r in rows} == {
+            ("column_removed", "lang"), ("column_added", "extra")}
+        assert sorted(map(tuple, rows), key=repr) == stored(
+            "schema_changes", "detected_at", at)
+
+
+def test_null_verdict_is_not_a_published_failure(spark, engine, monkeypatch):
+    """A rule whose is_valid is NULL is returned and stored but not
+    published as failed — only is_valid = false is a failure."""
+    import sparvi_spark.engine as engine_mod
+    from sparvi_spark.operators.validation import RESULT_SCHEMA, Rule
+
+    verdicts = [("ok", "equals", 1.0, 1.0, 1.0, True),
+                ("unknown", "equals", 1.0, 1.0, None, None),
+                ("bad", "equals", 1.0, 1.0, 2.0, False)]
+    monkeypatch.setattr(
+        engine_mod, "run_rules",
+        lambda df, rules, ref_tables=None: spark.createDataFrame(
+            verdicts, RESULT_SCHEMA))
+    rule = Rule("any", "placeholder", "equals", 1, "agg",
+                agg_expr="count(*)")
+    at = "2026-01-01 00:00:00"
+    res = engine.run_validations(_docs(spark), "documents", [rule],
+                                 run_at=at)
+    assert [tuple(r) for r in res.collect()] == verdicts
+    assert engine.state.read("validation_results").count() == 3
+    events = engine.state.read("engine_events").collect()
+    assert [(e["event_type"], e["details"]) for e in events] == [
+        ("validation_failure", "bad")]
+
+
 def test_anomaly_detection_run(spark, engine):
     # seed a metric series with one obvious spike
     base = dt.datetime(2026, 1, 1)

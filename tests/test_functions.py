@@ -1,5 +1,7 @@
 """Scalar-function surface (SURVEY §2.H translations)."""
 
+import struct
+
 from pyspark.sql import functions as F
 
 from sparvi_spark.functions import (
@@ -8,6 +10,7 @@ from sparvi_spark.functions import (
     generate_series_days,
     not_regexp,
     similar_to,
+    values_df,
 )
 
 
@@ -52,3 +55,17 @@ def test_generate_series_days(spark):
     df = spark.range(1).select(
         F.explode(generate_series_days("2026-01-01", "2026-01-05")).alias("d"))
     assert df.count() == 5
+
+
+def test_values_df_doubles_round_trip_bit_exact(spark):
+    """Engine results travel through values_df, so every double must come
+    back with the same bits — -0.0 too, whose bare literal parses as a
+    signless decimal zero."""
+    vals = [-0.0, 0.0, 0.1, 1 / 3, 1e-20, 1.2345678901234567e20,
+            9007199254740993.0, 5e-324, 1.7976931348623157e308,
+            float("nan"), float("inf"), -float("inf"), None]
+    got = [r["x"] for r in values_df(spark, [(v,) for v in vals],
+                                     "x double").collect()]
+    bits = [None if v is None else struct.pack(">d", v) for v in vals]
+    assert [None if v is None else struct.pack(">d", v)
+            for v in got] == bits

@@ -1,6 +1,8 @@
 """Unit tests for the training-data pipeline operators (dedup, similarity,
 text, multimodal) on constructed micro-corpora with known answers."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1340,8 +1342,10 @@ def test_sig_pairs_intake_lane_single_store_scan(spark, tmp_path):
     # re-scan) and never shuffles it
     plan = intake._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
+    # a store scan is the one that outputs ref_id; its Location string is
+    # no use, as Spark truncates long paths there
     ref_scans = [ln for ln in final.splitlines()
-                 if "FileScan parquet" in ln and "/ref" in ln]
+                 if re.search(r"FileScan parquet \S*\[[^\]]*\bref_id#", ln)]
     assert len(ref_scans) == 1, final
     assert "SortMergeJoin" not in final, final
 

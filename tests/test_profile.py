@@ -200,6 +200,46 @@ def test_operators_on_empty_input(spark):
     assert state.count() == 0
 
 
+def test_exact_distinct_counts_match_count_distinct_on_hostile_frame(spark):
+    """The exact lane takes its distinct counts from the melted plan, not
+    from countDistinct inside the fused pass. Both must count alike where
+    they could drift: NaN (one value), -0.0 beside 0.0 (one value), ±Inf,
+    float widened to double, decimal, boolean, an all-null column and an
+    empty frame."""
+    import datetime as dt
+    from decimal import Decimal as D
+
+    from sparvi_spark.operators.profile import distinct_count
+
+    nan, inf = float("nan"), float("inf")
+    schema = ("d double, f float, dec decimal(12,2), b boolean, "
+              "allnull string, s string, i int, ts timestamp")
+    rows = [
+        (nan, nan, D("1.10"), True, None, "a", 1, dt.datetime(2026, 1, 1)),
+        (-0.0, -0.0, D("0.00"), False, None, "", 2, None),
+        (0.0, 0.0, D("-0.00"), None, None, None, None,
+         dt.datetime(2026, 1, 2)),
+        (inf, inf, D("1.1"), True, None, "a", 1, dt.datetime(2026, 1, 1)),
+        (-inf, -inf, None, False, None, "b", -1, dt.datetime(2027, 1, 1)),
+        (None, None, D("9999999999.99"), None, None, "ü", 0, None),
+        (nan, nan, D("1.10"), True, None, "a", 1, dt.datetime(2026, 1, 1)),
+        (2.5, 2.5, D("-3.25"), True, None, "c", 3, dt.datetime(2026, 1, 3)),
+    ]
+    got = {}
+    for name, df in (("hostile", spark.createDataFrame(rows, schema)),
+                     ("empty", spark.createDataFrame([], schema))):
+        got[name] = profile_table(
+            df, "t", exact=True,
+            as_of="2026-06-01 00:00:00")["distinct_counts"]
+        old = df.agg(*[distinct_count(c) for c in df.columns]) \
+            .collect()[0].asDict()
+        assert got[name] == {c: old[f"{c}__distinct"] for c in df.columns}
+    # NaN twice and -0.0/0.0 each count once: NaN, 0, Inf, -Inf, 2.5
+    h = got["hostile"]
+    assert h["d"] == h["f"] == 5 and h["dec"] == 4 and h["allnull"] == 0
+    assert set(got["empty"].values()) == {0}
+
+
 def test_profile_large_magnitudes_and_single_row(spark):
     """Review-fix pins: the profiler survives |values| >= 1e16 (the old
     dec*dec sum-of-squares overflowed decimal(38,6) — ANSI crash) and a
