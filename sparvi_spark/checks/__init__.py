@@ -10,19 +10,13 @@ DECIMAL so float summation order cannot diverge between engines.
 
 from __future__ import annotations
 
+from sparvi_spark.functions import sql_str
+
 # The driver records at most 50 (query, oracle) pairs per round (observed:
 # CORRECTNESS_r01/r02 both cut at exactly entry 50 in insertion order).
 # Related same-schema checks are therefore unioned into one slot with a
 # literal tag column so every operator family stays oracle-graded.
 DRIVER_CHECK_CAP = 50
-
-
-def _sq(s: str) -> str:
-    """Escape a string for splicing into a single-quoted SPARK SQL
-    literal: backslash first, then quote — quote-only escaping turns a
-    trailing backslash into an escaped delimiter and swallows the
-    literal (DuckDB sides use '' doubling instead)."""
-    return s.replace("\\", "\\\\").replace("'", "\\'")
 
 
 def union_check(parts, tag_col: str = "mode"):
@@ -39,7 +33,7 @@ def union_check(parts, tag_col: str = "mode"):
         out = None
         for tag, f, _sql in _parts:
             d = f(spark, sf_dir).selectExpr(
-                f"'{_sq(tag)}' as {_tag}", "*")
+                f"{sql_str(tag)} as {_tag}", "*")
             out = d if out is None else out.unionAll(d)
         return out
 
@@ -67,7 +61,7 @@ def aligned_union_check(parts, columns, tag_col="part"):
         out = None
         for tag, f, _sql, exprs in _parts:
             d = f(spark, sf_dir).selectExpr(
-                f"'{_sq(tag)}' as {_tag}",
+                f"{sql_str(tag)} as {_tag}",
                 *[f"{exprs[c]} AS {c}" for c in _cols])
             out = d if out is None else out.unionAll(d)
         return out
@@ -91,12 +85,12 @@ def _melt_texts(keys, nums, strs):
         for i in range(2)
     ]
     items = [
-        f"named_struct('metric', '{_sq(m)}', "
+        f"named_struct('metric', {sql_str(m)}, "
         f"'num_val', cast(`{m}` as double), "
         f"'str_val', cast(null as string))"
         for m in nums
     ] + [
-        f"named_struct('metric', '{_sq(m)}', "
+        f"named_struct('metric', {sql_str(m)}, "
         f"'num_val', cast(null as double), "
         f"'str_val', cast(`{m}` as string))"
         for m in strs
@@ -117,7 +111,7 @@ def melt_part_df(df, tag: str, keys, nums, strs):
     JVM-side; the resolved plan is identical."""
     ks, items = _melt_texts(keys, nums, strs)
     return df.selectExpr(
-        f"'{_sq(tag)}' as part", *ks,
+        f"{sql_str(tag)} as part", *ks,
         f"explode(array({', '.join(items)})) as u",
     ).selectExpr("part", "k1", "k2", "u.metric", "u.num_val", "u.str_val")
 
@@ -130,7 +124,7 @@ def melt_part_sql(part_sql: str, tag: str, keys, nums, strs) -> str:
     ks, items = _melt_texts(keys, nums, strs)
     return (
         "SELECT part, k1, k2, u.metric, u.num_val, u.str_val FROM ("
-        f"SELECT '{_sq(tag)}' as part, {', '.join(ks)}, "
+        f"SELECT {sql_str(tag)} as part, {', '.join(ks)}, "
         f"explode(array({', '.join(items)})) as u FROM ({part_sql}))"
     )
 

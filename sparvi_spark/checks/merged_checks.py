@@ -280,12 +280,12 @@ def q_pair_scores_fused(spark, sf_dir):
             signed=base),
         "embedding_cosine": q_embedding_neardup(spark, sf_dir),
     }
-    from sparvi_spark.checks import _sq
+    from sparvi_spark.functions import sql_str
 
     out = None
     for tag, _f, _sql, exprs in _D02_PARTS:
         d = frames[tag].selectExpr(
-            f"'{_sq(tag)}' as part",
+            f"{sql_str(tag)} as part",
             *[f"{exprs[c]} AS {c}" for c in _D02_COLS])
         out = d if out is None else out.unionAll(d)
     return out

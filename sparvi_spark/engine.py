@@ -191,9 +191,7 @@ class Engine:
         rows = run_rules(df, rules, ref_tables=ref_tables).collect()
         results = values_df(self.spark, [tuple(r) for r in rows],
                             RESULT_SCHEMA)
-        # coalesce(1): a VALUES scan splits into up to one slice per core,
-        # and each slice would land as its own tiny state file
-        self.state.append("validation_results", results.coalesce(1).select(
+        self.state.append("validation_results", results.select(
             F.lit(table_name).alias("table_name"), "*",
             F.lit(run_at).cast("timestamp").alias("run_at")))
         # `is False`, not falsy: a NULL verdict is unknown, not failed
@@ -230,7 +228,7 @@ class Engine:
         rows = changes.collect()
         changes = values_df(self.spark, [tuple(r) for r in rows],
                             CHANGE_SCHEMA)
-        self.state.append("schema_changes", changes.coalesce(1).withColumn(
+        self.state.append("schema_changes", changes.withColumn(
             "detected_at", F.lit(as_of).cast("timestamp")))
         important = {r["change_type"] for r in rows if r["important"]}
         if important:

@@ -24,7 +24,17 @@ __all__ = [
     "time_bucket",
     "local_df",
     "values_df",
+    "sql_str",
 ]
+
+
+def sql_str(s) -> str:
+    """``s`` as a single-quoted Spark SQL string literal. Spark's parser
+    unescapes backslashes (``spark.sql.parser.escapedStringLiterals`` is
+    off by default) and reads ``''`` as two adjacent literals, so escape
+    the backslash first, then the quote: every character survives.
+    DuckDB text escapes by doubling the quote instead."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def local_df(spark, rows, schema):
@@ -76,7 +86,7 @@ def values_df(spark, rows, schema):
         if typ == "boolean":
             return "true" if v else "false"
         if typ == "string":
-            return "'" + str(v).replace("'", "''") + "'"
+            return sql_str(v)
         raise ValueError(f"values_df: unsupported type {typ!r}")
 
     vals = ", ".join(

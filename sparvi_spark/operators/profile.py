@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparvi_spark.functions import sql_str
+
 # ---------------------------------------------------------------------------
 # type bucketing (reference: backend/core/metadata/collector.py:610-625)
 # ---------------------------------------------------------------------------
@@ -125,7 +127,8 @@ def distinct_counts_melted(df: DataFrame, cols: list[str]) -> DataFrame:
         if not group:
             continue
         cast_t = slots[slot]
-        stack = ", ".join(f"'{c}', cast(`{c}` as {cast_t})" for c in group)
+        stack = ", ".join(f"{sql_str(c)}, cast(`{c}` as {cast_t})"
+                          for c in group)
         proj = [f"stack({len(group)}, {stack}) as (column_name, {slot})"] + [
             f"cast(null as {slots[s]}) as {s}" for s in slot_names if s != slot
         ]
@@ -188,7 +191,7 @@ def exact_percentiles(
     # module docstring for the measurement; the resolved plan is identical).
     from sparvi_spark.functions import values_df
 
-    stack = ", ".join(f"'{c}', cast(`{c}` as double)" for c in cols)
+    stack = ", ".join(f"{sql_str(c)}, cast(`{c}` as double)" for c in cols)
     melted = (
         df.selectExpr(f"stack({len(cols)}, {stack}) as (column_name, v)")
         .where("v is not null")
@@ -683,7 +686,8 @@ def top_values(df: DataFrame, columns: Iterable[str], k: int = 10) -> DataFrame:
     # eager df.count(): building the frame costs no job, and the whole
     # top-K (total + counts + window) executes as ONE action
     total = df.agg(F.count(F.lit(1)).alias("__total"))
-    stack_expr = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols)
+    stack_expr = ", ".join(f"{sql_str(c)}, cast(`{c}` as string)"
+                           for c in cols)
     melted = df.select(
         F.expr(f"stack({len(cols)}, {stack_expr}) as (column_name, value)")
     ).where(F.col("value").isNotNull())

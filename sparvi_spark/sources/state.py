@@ -8,8 +8,8 @@ latest-per-key compaction are batch jobs over the same tables
 (supabase_manager.py:275-305 keep-latest-30).
 
 Scale notes: appends are partitioned by ``run_date`` so both retention and
-time-ranged reads prune partitions; each append coalesces to a few files to
-avoid small-file explosion from frequent runs.
+time-ranged reads prune partitions; each append coalesces to a few files
+(an in-memory frame to one) to avoid small-file explosion from frequent runs.
 """
 
 from __future__ import annotations
@@ -391,6 +391,13 @@ def table_format_available(spark: SparkSession, fmt: str) -> bool:
         return False
 
 
+def _in_memory(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s plan is a LocalRelation."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return all(leaves.apply(i).getClass().getSimpleName() == "LocalRelation"
+               for i in range(leaves.size()))
+
+
 class StateStore:
     """State tables under ``root`` (one dir per entity).
 
@@ -534,12 +541,15 @@ class StateStore:
                  if c in df.columns), None)
             stamp = F.to_date(ts_col) if ts_col else F.current_date()
             df = df.withColumn("run_date", stamp)
+        # an in-memory frame (functions.values_df rows) scans as one slice
+        # per core; its few rows belong in one file, not a file per slice
+        df = df.coalesce(1 if _in_memory(df) else 4)
         if self._acid:
             # the format's log is the commit protocol — no pointer dirs
-            (df.coalesce(4).write.format(self.fmt).mode("append")
+            (df.write.format(self.fmt).mode("append")
              .partitionBy("run_date").save(self._path(entity)))
             return
-        (df.coalesce(4).write.mode("append")
+        (df.write.mode("append")
          .partitionBy("run_date").parquet(self._data_path(entity, create=True)))
 
     def append_rows(self, entity: str, rows: list[dict[str, Any]]) -> None:

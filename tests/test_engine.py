@@ -1,6 +1,8 @@
 """Engine lifecycle end-to-end (SURVEY §3) + collection plans + sources."""
 
 import datetime as dt
+import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -80,6 +82,13 @@ def _count_jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _stored(engine, entity, col, at, *drop):
+    """The rows ``entity`` holds for timestamp ``at`` in ``col``, sorted."""
+    return sorted((tuple(r) for r in engine.state.read(entity)
+                   .where(F.col(col) == F.lit(at).cast("timestamp"))
+                   .drop(col, "run_date", *drop).collect()), key=repr)
+
+
 def test_engine_returns_the_rows_it_stores(spark, engine):
     """Over two days, run_validations and track_schema hand back exactly
     the rows they stored, already computed: collecting the returned
@@ -89,17 +98,12 @@ def test_engine_returns_the_rows_it_stores(spark, engine):
             (df.drop("lang").withColumn("extra", F.lit(1)),
              "2026-01-02 00:00:00")]
 
-    def stored(entity, col, at, *drop):
-        return sorted((tuple(r) for r in engine.state.read(entity)
-                       .where(F.col(col) == F.lit(at).cast("timestamp"))
-                       .drop(col, "run_date", *drop).collect()), key=repr)
-
     for i, (d, at) in enumerate(days):
         res = engine.run_validations(d, "documents", run_at=at)
         rows, jobs = _count_jobs(spark, f"val{i}", res.collect)
         assert jobs == 0
-        assert rows and sorted(map(tuple, rows), key=repr) == stored(
-            "validation_results", "run_at", at, "table_name")
+        assert rows and sorted(map(tuple, rows), key=repr) == _stored(
+            engine, "validation_results", "run_at", at, "table_name")
 
         changes = engine.track_schema(d, "documents",
                                       primary_keys=("doc_id",), as_of=at)
@@ -110,8 +114,45 @@ def test_engine_returns_the_rows_it_stores(spark, engine):
         assert jobs == 0
         assert {(r["change_type"], r["column_name"]) for r in rows} == {
             ("column_removed", "lang"), ("column_added", "extra")}
-        assert sorted(map(tuple, rows), key=repr) == stored(
-            "schema_changes", "detected_at", at)
+        assert sorted(map(tuple, rows), key=repr) == _stored(
+            engine, "schema_changes", "detected_at", at)
+
+
+
+def test_engine_results_keep_quotes_and_backslashes(spark, engine):
+    """Returned and stored rows carry names with ' and \\ unchanged —
+    the strings the lazy rule and diff plans produce themselves."""
+    from sparvi_spark.operators.schema_diff import (
+        detect_changes, snapshot_from_dataframe)
+    from sparvi_spark.operators.validation import Rule, run_rules
+
+    day1 = spark.createDataFrame([(1, "x", 2)], "a int, b string, c int") \
+        .toDF("id", "o'k", "p\\")
+    day2 = spark.createDataFrame([(1, 3, 4)], "a int, b int, c int") \
+        .toDF("id", "o'k", "a\\tb")
+    rules = [Rule(n, "", "equals", 1, "sql", sql="SELECT 1")
+             for n in ("it's", "p\\", "\\'")]
+    at = "2026-01-01 00:00:00"
+    res = engine.run_validations(day1, "t", rules, run_at=at)
+    want = sorted(map(tuple, run_rules(day1, rules).collect()), key=repr)
+    assert {r[0] for r in want} == {"it's", "p\\", "\\'"}
+    assert sorted(map(tuple, res.collect()), key=repr) == want
+    assert _stored(engine, "validation_results", "run_at", at,
+                   "table_name") == want
+    # three VALUES rows scan as three slices; the append still writes one file
+    files = glob.glob(os.path.join(engine.state._data_path(
+        "validation_results"), "**", "*.parquet"), recursive=True)
+    assert len(files) == 1, files
+
+    engine.track_schema(day1, "t", as_of=at)
+    at2 = "2026-01-02 00:00:00"
+    got = engine.track_schema(day2, "t", as_of=at2)
+    want = sorted(map(tuple, detect_changes(
+        snapshot_from_dataframe(spark, day1, "t"),
+        snapshot_from_dataframe(spark, day2, "t")).collect()), key=repr)
+    assert {r[2] for r in want} == {"o'k", "p\\", "a\\tb"}
+    assert sorted(map(tuple, got.collect()), key=repr) == want
+    assert _stored(engine, "schema_changes", "detected_at", at2) == want
 
 
 def test_null_verdict_is_not_a_published_failure(spark, engine, monkeypatch):

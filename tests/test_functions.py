@@ -69,3 +69,12 @@ def test_values_df_doubles_round_trip_bit_exact(spark):
     bits = [None if v is None else struct.pack(">d", v) for v in vals]
     assert [None if v is None else struct.pack(">d", v)
             for v in got] == bits
+
+
+def test_values_df_strings_round_trip(spark):
+    """Quotes and backslashes reach the frame unchanged — a trailing
+    backslash must not escape the closing quote."""
+    vals = ["o'k", "p\\", "a\\tb", "it''s", "\\'", "x\ny", "ü", "", None]
+    got = [r["s"] for r in values_df(spark, [(v,) for v in vals],
+                                     "s string").collect()]
+    assert got == vals

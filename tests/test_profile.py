@@ -205,7 +205,7 @@ def test_exact_distinct_counts_match_count_distinct_on_hostile_frame(spark):
     from countDistinct inside the fused pass. Both must count alike where
     they could drift: NaN (one value), -0.0 beside 0.0 (one value), ±Inf,
     float widened to double, decimal, boolean, an all-null column and an
-    empty frame."""
+    empty frame; columns named with a quote and a backslash."""
     import datetime as dt
     from decimal import Decimal as D
 
@@ -225,9 +225,12 @@ def test_exact_distinct_counts_match_count_distinct_on_hostile_frame(spark):
         (nan, nan, D("1.10"), True, None, "a", 1, dt.datetime(2026, 1, 1)),
         (2.5, 2.5, D("-3.25"), True, None, "c", 3, dt.datetime(2026, 1, 3)),
     ]
+    # quote and backslash in names: the melt labels columns with literals
+    names = ["d", "f", "dec", "b", "allnull", "o'k", "p\\", "ts"]
     got = {}
     for name, df in (("hostile", spark.createDataFrame(rows, schema)),
                      ("empty", spark.createDataFrame([], schema))):
+        df = df.toDF(*names)
         got[name] = profile_table(
             df, "t", exact=True,
             as_of="2026-06-01 00:00:00")["distinct_counts"]
@@ -237,6 +240,7 @@ def test_exact_distinct_counts_match_count_distinct_on_hostile_frame(spark):
     # NaN twice and -0.0/0.0 each count once: NaN, 0, Inf, -Inf, 2.5
     h = got["hostile"]
     assert h["d"] == h["f"] == 5 and h["dec"] == 4 and h["allnull"] == 0
+    assert h["o'k"] == h["p\\"] == 5
     assert set(got["empty"].values()) == {0}
 
 
